@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.operators.{ClusterStore, LmStore, SignatureStore, SimhashStore, TextOps}
+import graft.operators.{ClusterStore, LmStore, SignatureStore, SimhashStore}
+import graft.store.SessionCache
 
 /** Serving-mode A/B: the PersistedStore family's measured story.
   *
@@ -94,7 +95,7 @@ object StoreModeBench {
         SimhashStore.detach(sfDir)
         ClusterStore.detach(sfDir)
         LmStore.detach(sfDir)
-        TextOps.invalidateDir(sfDir)
+        SessionCache.invalidate(sfDir)
       }
 
     def js(m: Map[String, Double]): String =

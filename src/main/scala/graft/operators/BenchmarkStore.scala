@@ -26,11 +26,8 @@ import org.apache.spark.sql.functions._
   *
   * Lifecycle (`build`/`attach(dir, storeDir[, token])`/`detach`/
   * `snapshotOf`) comes from [[graft.store.PersistedStore]] — the one
-  * store contract. Store reads are stateless pruned parquet scans —
-  * there is no session-cached intermediate to validate, so unlike the
-  * signature store the token here is refresh-discipline metadata
-  * surfaced via `snapshotOf`, not a listing-avoidance lever (the
-  * default no-op route-change hook is exactly right). */
+  * store contract. The attach token validates the session-cached
+  * q57/q60 hit set (which reads the store) with no listing. */
 object BenchmarkStore extends graft.store.PersistedStore {
 
   /** The benchmark membership rule (shared with the q57 oracle): every
@@ -57,4 +54,7 @@ object BenchmarkStore extends graft.store.PersistedStore {
   /** The persisted benchmark vectors (bvec, embedding). */
   def vectors(spark: SparkSession, storeDir: String): DataFrame =
     spark.read.parquet(s"$storeDir/bench_vectors")
+
+  override protected def onRouteChange(dir: String): Unit =
+    graft.store.SessionCache.invalidate(dir, VectorOps.decontamHitsCache)
 }

@@ -39,4 +39,7 @@ object BpeStore extends graft.store.PersistedStore {
       .select("step", "pair", "cnt")
       .as[(Long, String, Long)].collect().sortBy(_._1).toSeq
   }
+
+  override protected def onRouteChange(dir: String): Unit =
+    graft.store.SessionCache.invalidate(dir, TextOps.bpeMergesCache)
 }

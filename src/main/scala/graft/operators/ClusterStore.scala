@@ -34,14 +34,13 @@ object ClusterStore extends graft.store.PersistedStore {
     val labels = PipelineOps.fixpointLabels(spark, dir)
     PipelineOps.assembleClusters(spark, dir, labels)
       .write.mode("overwrite").parquet(s"$storeDir/clusters")
-    TextOps.releaseCheckpoint(labels)
+    graft.store.SessionCache.releaseCheckpoint(labels)
   }
 
   /** The cluster-assignment table (flat or `batch=<id>/` layout). */
   def clusters(spark: SparkSession, storeDir: String): DataFrame =
     graft.store.PersistedStore.readTable(spark, s"$storeDir/clusters")
 
-  override protected def onRouteChange(dir: String, storeDir: Option[String],
-      token: Option[String]): Unit =
-    TextOps.invalidateClusters(dir)
+  override protected def onRouteChange(dir: String): Unit =
+    graft.store.SessionCache.invalidate(dir, PipelineOps.clustersCache)
 }

@@ -47,7 +47,7 @@ object LmStore extends graft.store.PersistedStore {
   def dsirDelta(spark: SparkSession, storeDir: String): DataFrame =
     graft.store.PersistedStore.readTable(spark, s"$storeDir/dsir_delta")
 
-  override protected def onRouteChange(dir: String, storeDir: Option[String],
-      token: Option[String]): Unit =
-    TextOps.invalidateLms(dir)
+  override protected def onRouteChange(dir: String): Unit =
+    graft.store.SessionCache.invalidate(dir,
+      TextOps.lmRawCache, TextOps.dsirWeightsCache)
 }

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.store.SessionCache
+import graft.store.SessionCache.Source
 
 /** Corpus-curation operators a large-scale training-data pipeline
   * needs beyond per-document scoring: near-dup CLUSTERING (turning the
@@ -141,8 +143,8 @@ object PipelineOps {
     * not per query), so consumers route through the session cache or
     * an attached [[ClusterStore]]. The returned plan reads the final
     * labels checkpoint; callers that materialize the result release it
-    * via [[TextOps.releaseCheckpoint]] (the cached path and the store
-    * build both do). */
+    * via [[SessionCache.releaseCheckpoint]] (the cached path and the
+    * store build both do). */
   def dedupClustersFresh(s: SparkSession, dir: String): DataFrame =
     assembleClusters(s, dir, fixpointLabels(s, dir))
 
@@ -197,12 +199,12 @@ object PipelineOps {
           case Some(v: Number) => v.longValue()
           case _ => 0L
         }
-        TextOps.releaseCheckpoint(labels) // superseded round
+        SessionCache.releaseCheckpoint(labels) // superseded round
         labels = next
         converged = changed == 0
         rounds += 1
       }
-      TextOps.releaseCheckpoint(edges)
+      SessionCache.releaseCheckpoint(edges)
       labels
   }
 
@@ -223,6 +225,8 @@ object PipelineOps {
         .withColumn("keep", $"doc_id" === $"cluster_id")
   }
 
+  private[graft] val clustersCache = SessionCache[DataFrame]("clusters")
+
   /** THE cluster-assignment entry point (round-7 verdict #2): an
     * attached [[ClusterStore]] serves the persisted `(doc_id,
     * cluster_id, cluster_size, keep)` table (the warehouse path —
@@ -241,10 +245,12 @@ object PipelineOps {
     ClusterStore.attachedStore(dir) match {
       case Some(sd) => ClusterStore.clusters(s, sd)
       case None =>
-        TextOps.cachedClusters(s, dir) {
+        // the fixpoint reads the pair graph, the assembly the documents
+        clustersCache(s, dir,
+            Seq(TextOps.signatureSource(dir), Source(t(dir, "documents")))) {
           val labels = fixpointLabels(s, dir)
           val out = assembleClusters(s, dir, labels).localCheckpoint(true)
-          TextOps.releaseCheckpoint(labels) // materialized: labels consumable
+          SessionCache.releaseCheckpoint(labels) // materialized: labels consumable
           out
         }
     }

@@ -26,9 +26,9 @@ import org.apache.spark.sql.functions._
   * reason curation pipelines persist signatures.
   *
   * Lifecycle (build/attach/token/detach) comes from
-  * [[graft.store.PersistedStore]] — the one store contract; routing
-  * lands in TextOps through the [[onRouteChange]] hook (token pinned
-  * as the dir's fingerprint, session intermediates invalidated). */
+  * [[graft.store.PersistedStore]] — the one store contract. The
+  * attach token validates the session-cached entries that read the
+  * store (signatures, pairs, clusters) with no listing. */
 object SignatureStore extends graft.store.PersistedStore {
 
   /** Build (or refresh) the store from `<dir>/documents.parquet`. */
@@ -43,18 +43,11 @@ object SignatureStore extends graft.store.PersistedStore {
   def signatures(spark: SparkSession, storeDir: String): DataFrame =
     graft.store.PersistedStore.readTable(spark, s"$storeDir/signatures")
 
-  /** Routing changed: the token (when present) becomes the dir's
-    * pinned cache fingerprint — O(1) validation, no listing — and any
-    * session intermediate computed from the previous routing is
-    * superseded. */
-  override protected def onRouteChange(dir: String, storeDir: Option[String],
-      token: Option[String]): Unit = {
-    token match {
-      case Some(t) => TextOps.pinSnapshot(dir, t)
-      case None    => TextOps.unpinSnapshot(dir) // source changed: re-list
-    }
-    TextOps.invalidateDir(dir)
-  }
+  /** Routing changed: the session intermediates computed from the
+    * previous routing are superseded. */
+  override protected def onRouteChange(dir: String): Unit =
+    graft.store.SessionCache.invalidate(dir,
+      TextOps.sigCache, TextOps.pairsCache, PipelineOps.clustersCache)
 
   /** The q24 candidate-pair gate, served from the store: identical
     * banding, valve, and join shape to `TextOps.lshCandidatePairs`

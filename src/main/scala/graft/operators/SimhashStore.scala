@@ -32,7 +32,6 @@ object SimhashStore extends graft.store.PersistedStore {
   def simhashes(spark: SparkSession, storeDir: String): DataFrame =
     graft.store.PersistedStore.readTable(spark, s"$storeDir/simhashes")
 
-  override protected def onRouteChange(dir: String, storeDir: Option[String],
-      token: Option[String]): Unit =
-    TextOps.invalidateSimhashes(dir)
+  override protected def onRouteChange(dir: String): Unit =
+    graft.store.SessionCache.invalidate(dir, TextOps.simhashCache)
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.Hashing
+import graft.store.SessionCache
+import graft.store.SessionCache.Source
 
 /** Similarity search over the `embeddings` table (builder-prompt
   * first-class requirement): brute-force cosine top-k as the exact
@@ -121,23 +123,15 @@ object VectorOps {
     * (the signature-table precedent; round-9 measurement: whichever
     * gate runs second previously re-ran the whole band scan + three
     * broadcast builds + cosine re-rank for an identical pair set).
-    * Fingerprinted on the embeddings table AND the attached benchmark
-    * store path, so a corpus rewrite or a store attach/detach rebuilds
+    * Validated on the embeddings table AND the attached benchmark
+    * store, so a corpus rewrite or a store attach/detach rebuilds
     * naturally. */
-  private final case class CachedHits(fp: String, df: DataFrame)
-  private val decontamHitsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, CachedHits]()
+  private[graft] val decontamHitsCache = SessionCache[DataFrame]("decontamHits")
 
-  private def decontamHits(s: SparkSession, dir: String): DataFrame = {
-    val key = TextOps.sessionKey(s) + "|" + dir
-    val fp = (t(dir, "embeddings") +: BenchmarkStore.attachedStore(dir).toList)
-      .map(p => TextOps.fingerprint(s, p)).mkString("+")
-    val hit = decontamHitsCache.get(key)
-    if (hit != null && hit.fp == fp) hit.df
-    else decontamHitsCache.compute(key, (_, old) =>
-      if (old != null && old.fp == fp) old
-      else CachedHits(fp, decontamHitsUncached(s, dir).localCheckpoint(true))).df
-  }
+  private def decontamHits(s: SparkSession, dir: String): DataFrame =
+    decontamHitsCache(s, dir,
+        Source(t(dir, "embeddings")) +: Source.stored(BenchmarkStore, dir).toSeq)(
+      decontamHitsUncached(s, dir).localCheckpoint(true))
 
   /** The builder plan (bipartite sign-LSH candidates + exact cosine
     * re-rank, 0.4 gate) — the uncached form the plan-shape tests
@@ -200,24 +194,16 @@ object VectorOps {
     * 2 v·c, cid) argmin). M×k×Sub doubles of driver-side training
     * state — the q36 precedent. */
   /** Codebooks are BUILD-ONCE training state shared by q75 (encode)
-    * and q76 (ADC serving) — two consumers of one training run, cached
-    * per (session, dir, corpus version) under the bpeMergesCache
-    * discipline (M×k×Sub driver-side doubles, nothing to release). */
-  private val pqCodebooksCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Seq[Seq[(Int, Seq[Double])]])]()
+    * and q76 (ADC serving) — two consumers of one training run,
+    * session-cached per (dir, corpus version) like the BPE merges
+    * (M×k×Sub driver-side doubles). */
+  private[graft] val pqCodebooksCache =
+    SessionCache[Seq[Seq[(Int, Seq[Double])]]]("pqCodebooks")
 
   private[operators] def pqCodebooks(s: SparkSession, dir: String)
-      : Seq[Seq[(Int, Seq[Double])]] = {
-    val key = TextOps.sessionKey(s) + "|" + dir
-    val fp = TextOps.fingerprint(s, t(dir, "embeddings"))
-    val hit = pqCodebooksCache.get(key)
-    if (hit != null && hit._1 == fp) hit._2
-    else {
-      val cb = pqCodebooksUncached(s, dir)
-      pqCodebooksCache.put(key, (fp, cb))
-      cb
-    }
-  }
+      : Seq[Seq[(Int, Seq[Double])]] =
+    pqCodebooksCache(s, dir, Seq(Source(t(dir, "embeddings"))))(
+      pqCodebooksUncached(s, dir))
 
   private def pqCodebooksUncached(s: SparkSession, dir: String)
       : Seq[Seq[(Int, Seq[Double])]] = {

@@ -18,11 +18,11 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   *    path. Implementations hook [[onRouteChange]] to invalidate
   *    anything derived from the previous routing.
   *  - **token-validated**: the optional snapshot token names the
-  *    store's immutable version — validation against it is O(1), no
-  *    file listing (the table-format contract; on an object store a
-  *    recursive listing per query call is seconds of metadata I/O).
-  *    The caller owns refresh discipline: rotate the token when the
-  *    store is rebuilt.
+  *    store's immutable version — [[SessionCache]] validates entries
+  *    read from the store against it in O(1), no file listing (the
+  *    table-format contract; on an object store a recursive listing
+  *    per query call is seconds of metadata I/O). The caller owns
+  *    refresh discipline: rotate the token when the store is rebuilt.
   *  - **`batch=<id>/` overwrite layout** for incrementally-maintained
   *    tables (companion helpers): each micro-batch OWNS its partition
   *    and OVERWRITES it, so a foreachBatch replay atomically replaces
@@ -51,13 +51,13 @@ trait PersistedStore {
   private def attachImpl(dir: String, storeDir: String,
       tok: Option[String]): Unit = {
     attached.put(dir, (storeDir, tok))
-    onRouteChange(dir, Some(storeDir), tok)
+    onRouteChange(dir)
   }
 
   /** Restore the in-query (store-less) path for `dir`. */
   final def detach(dir: String): Unit = {
     attached.remove(dir)
-    onRouteChange(dir, None, None)
+    onRouteChange(dir)
   }
 
   /** The attached token, if any — lets a pipeline assert which store
@@ -70,9 +70,9 @@ trait PersistedStore {
     Option(attached.get(dir)).map(_._1)
 
   /** Hook: routing under `dir` changed — invalidate anything derived
-    * from the previous routing (session caches, pinned tokens). */
-  protected def onRouteChange(dir: String, storeDir: Option[String],
-      token: Option[String]): Unit = ()
+    * from the previous routing (the store's [[SessionCache]]
+    * families). */
+  protected def onRouteChange(dir: String): Unit = ()
 }
 
 object PersistedStore {

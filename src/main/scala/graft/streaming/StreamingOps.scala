@@ -237,7 +237,7 @@ object StreamingOps {
     graft.store.PersistedStore
       .writeBatch(survivors, s"$storeDir/signatures", batchId)
     // the batch intermediate dies with the trigger
-    TextOps.releaseCheckpoint(sigs)
+    graft.store.SessionCache.releaseCheckpoint(sigs)
   }
 
   /** Incremental SimHash near-dup gate (the q70 gate as a stream;
@@ -315,7 +315,7 @@ object StreamingOps {
       .join(dropVsStore.union(dropWithin).distinct(), Seq("doc_id"), "left_anti")
     graft.store.PersistedStore
       .writeBatch(survivors, s"$storeDir/simhashes", batchId)
-    TextOps.releaseCheckpoint(sigs)
+    graft.store.SessionCache.releaseCheckpoint(sigs)
   }
 
   // ---- incremental corpus diff (the q55 operator as a stream) --------
@@ -404,7 +404,7 @@ object StreamingOps {
     }
     graft.store.PersistedStore.writeBatch(deltas, s"$storeDir/deltas", batchId)
     graft.store.PersistedStore.writeBatch(hashed, s"$storeDir/index", batchId)
-    graft.operators.TextOps.releaseCheckpoint(hashed)
+    graft.store.SessionCache.releaseCheckpoint(hashed)
   }
 
   /** Close out a finished corpus version: ids whose LATEST index entry

@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{ClusterStore, PipelineOps, TextOps}
+import graft.operators.{ClusterStore, PipelineOps}
+import graft.store.SessionCache
 
 /** The persisted cluster-assignment store (round-7 verdict #2):
   * store-served assignment equals the fresh fixpoint, attached routing
@@ -63,7 +64,7 @@ class ClusterStoreSpec extends AnyFunSuite {
 
   test("the session cache shares ONE fixpoint run across q40/q59/q72") {
     ClusterStore.detach(dir)
-    TextOps.invalidateClusters(dir)
+    SessionCache.invalidate(dir, PipelineOps.clustersCache)
     val before = spark.sparkContext.getPersistentRDDs.keySet
     PipelineOps.dedupClusters(spark, dir).count()
     val ckIds = spark.sparkContext.getPersistentRDDs.keySet -- before
@@ -75,9 +76,9 @@ class ClusterStoreSpec extends AnyFunSuite {
     assert(second.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
       s"second consumer re-derived the assignment:\n$second")
     // explicit invalidation releases the checkpoint storage
-    TextOps.invalidateClusters(dir)
+    SessionCache.invalidate(dir, PipelineOps.clustersCache)
     val after = spark.sparkContext.getPersistentRDDs.keySet
     assert(ckIds.forall(id => !after.contains(id)),
-      s"invalidateClusters left checkpoint blocks pinned: ${ckIds.intersect(after)}")
+      s"invalidate left checkpoint blocks pinned: ${ckIds.intersect(after)}")
   }
 }

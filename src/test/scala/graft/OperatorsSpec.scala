@@ -232,7 +232,7 @@ class OperatorsSpec extends AnyFunSuite {
     val s1 = SparkEntry.queries("q81_dsir_select")(spark, dir).collect().toSeq
     val s2 = SparkEntry.queries("q81_dsir_select")(spark, dir).collect().toSeq
     assert(s1 === s2, "selection not deterministic across runs")
-    TextOps.invalidateDir(tmp)
+    graft.store.SessionCache.invalidate(tmp)
   }
 
   test("BpeStore attach routes q77/q78's merge training through the " +
@@ -566,6 +566,32 @@ class OperatorsSpec extends AnyFunSuite {
     assert(flagged.nonEmpty, "gate found nothing at this scale")
     // and the output covers the whole corpus side exactly once
     assert(out.length === emb.count(_._1 % 19 != 0))
+  }
+
+  test("SessionCache.invalidate(dir) drops every family's state: q57's " +
+    "checkpoint is released and q57/q75/q77 count a miss on the next call") {
+    import java.nio.file.Files
+    val tmp = Files.createTempDirectory("graft-invalidate").toString
+    Seq("documents", "embeddings").foreach(tb => spark.read
+      .parquet(s"$dir/$tb.parquet").coalesce(1).write.parquet(s"$tmp/$tb.parquet"))
+    val leaves = Seq("q57_semantic_decontam", "q75_pq_codes", "q77_bpe_train")
+    val families = Seq(VectorOps.decontamHitsCache, VectorOps.pqCodebooksCache,
+      TextOps.bpeMergesCache)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    SparkEntry.queries(leaves.head)(spark, tmp).collect()
+    val ckIds = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(ckIds.nonEmpty, "expected a localCheckpoint for the q57 hit set")
+    leaves.tail.foreach(q => SparkEntry.queries(q)(spark, tmp).collect())
+    val entries = families.map(_.stats.entries)
+    val misses = families.map(_.stats.misses)
+    graft.store.SessionCache.invalidate(tmp)
+    assert(families.map(_.stats.entries) === entries.map(_ - 1))
+    val live = spark.sparkContext.getPersistentRDDs.keySet
+    assert(ckIds.forall(id => !live.contains(id)),
+      s"invalidate left the q57 checkpoint pinned: ${ckIds.intersect(live)}")
+    leaves.foreach(q => SparkEntry.queries(q)(spark, tmp).collect())
+    assert(families.map(_.stats.misses) === misses.map(_ + 1))
+    graft.store.SessionCache.invalidate(tmp)
   }
 
   test("q60: the leakage report is q57 read from the benchmark side — " +

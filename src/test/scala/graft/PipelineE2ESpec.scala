@@ -85,8 +85,8 @@ class PipelineE2ESpec extends AnyFunSuite {
     assert(packedIds.toSet === selectedIds)
     assert(splitRows.map(_.getLong(0)).toSet === selectedIds)
     assert(selectedIds.subsetOf(dedupedIds))
-    TextOps.invalidateDir(stage1)
-    TextOps.invalidateDir(stage2)
-    TextOps.invalidateDir(stage3)
+    graft.store.SessionCache.invalidate(stage1)
+    graft.store.SessionCache.invalidate(stage2)
+    graft.store.SessionCache.invalidate(stage3)
   }
 }

@@ -198,14 +198,19 @@ class PipelineOpsSpec extends AnyFunSuite {
     // the filter is real (both rules fire) and not vacuous
     assert(rows.count(_._6) > 100 && rows.count(!_._6) > 50)
     // scale shape: per-row expressions only — the allowed exchanges
-    // are the presentation orderBy's range partitioning and the
-    // round-9 degenerate-scan widener (Scans.widen — a deterministic
-    // pmod(xxhash64(row)) exchange, a no-op on any source already
-    // core-count wide); nothing GROUP-key-hashed below the sort
+    // are the presentation orderBy's range partitioning and at most
+    // one degenerate-scan widener (Scans.widen: `cores` partitions on
+    // pmod(xxhash64(struct(row)), cores*64), a no-op on any source
+    // already core-count wide); nothing GROUP-key-hashed below the sort
     val plan = out.queryExecution.executedPlan.toString
-    val exchanges = plan.linesIterator.filter(_.contains("Exchange"))
-      .filterNot(l => l.contains("RoundRobinPartitioning") ||
-        l.contains("pmod(xxhash64")).toSeq
+    val cores = spark.sparkContext.defaultParallelism
+    val widener = (raw"hashpartitioning\(pmod\(xxhash64\(struct\(.*\), 42\), " +
+      raw"${cores * 64}\), $cores\)").r
+    val (hashed, exchanges) = plan.linesIterator.filter(_.contains("Exchange"))
+      .filterNot(_.contains("RoundRobinPartitioning")).toSeq
+      .partition(_.contains("pmod(xxhash64"))
+    assert(hashed.size <= 1 && hashed.forall(widener.findFirstIn(_).isDefined),
+      s"only the widener's exact partitioning may hash rows:\n$plan")
     assert(exchanges.size == 1 && exchanges.head.contains("rangepartitioning"),
       s"repetition metrics must be shuffle-free below the sort:\n$plan")
   }

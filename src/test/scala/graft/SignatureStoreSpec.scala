@@ -3,7 +3,9 @@ package graft
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.scheduler.SparkListenerApplicationEnd
 import graft.operators.{SignatureStore, TextOps}
+import graft.store.SessionCache
 
 /** The persisted signature store: pairs from the store equal pairs
   * computed fresh from text, and the gate's store read prunes the
@@ -72,10 +74,10 @@ class SignatureStoreSpec extends AnyFunSuite {
 
     // explicit invalidation releases the fresh entry too
     val fresh = spark.sparkContext.getPersistentRDDs.keySet -- before
-    TextOps.invalidateDir(dir)
+    SessionCache.invalidate(dir)
     val after = spark.sparkContext.getPersistentRDDs.keySet
     assert(fresh.forall(id => !after.contains(id)),
-      "invalidateDir left checkpoint blocks pinned")
+      "invalidate left checkpoint blocks pinned")
   }
 
   test("a pinned snapshot token makes cache validation listing-free") {
@@ -88,22 +90,87 @@ class SignatureStoreSpec extends AnyFunSuite {
     // attach WITH a snapshot token: the token is the fingerprint — no
     // recursive store listing on any subsequent query-call validation
     SignatureStore.attach(dir, store, snapshot = "v1")
+    def listings = Seq(TextOps.sigCache, TextOps.pairsCache).map(_.stats.listings).sum
     try {
-      val n0 = TextOps.fingerprintListings.get()
+      val n0 = listings
       val p1 = TextOps.lshCandidatePairs(spark, dir).as[(Long, Long)].collect().toSet
       (1 to 5).foreach { _ =>
         val p = TextOps.lshCandidatePairs(spark, dir).as[(Long, Long)].collect().toSet
         assert(p === p1)
         TextOps.perDocSignatures(spark, dir).count()
       }
-      assert(TextOps.fingerprintListings.get() === n0,
+      assert(listings === n0,
         "pinned-token validation still performed file listings")
-      // rotating the token invalidates: the next call rebuilds (and the
-      // result stays correct — the store is unchanged, so pairs agree)
-      TextOps.pinSnapshot(dir, "v2")
+      // rotating the token invalidates: the next call rebuilds the pair
+      // graph exactly once (and the result stays correct — the store is
+      // unchanged, so pairs agree)
+      val m0 = TextOps.pairsCache.stats.misses
+      SignatureStore.attach(dir, store, snapshot = "v2")
       val p2 = TextOps.lshCandidatePairs(spark, dir).as[(Long, Long)].collect().toSet
+      TextOps.lshCandidatePairs(spark, dir).count()
       assert(p2 === p1)
-    } finally TextOps.detachStore(dir)
+      assert(TextOps.pairsCache.stats.misses === m0 + 1)
+      assert(listings === n0)
+    } finally SignatureStore.detach(dir)
+  }
+
+  test("a signature-store token validates only the entries read from " +
+    "that store: q79 sees an in-place documents rewrite") {
+    import spark.implicits._
+    val q79 = SparkEntry.queries("q79_charlm_score")
+    val dir = Files.createTempDirectory("graft-tokscope").toString
+    writeDocs(dir, Seq(40L -> "ab ab ab", 41L -> "abc"))
+    val store = Files.createTempDirectory("graft-tokscope-store").toString
+    SignatureStore.build(spark, dir, store)
+    SignatureStore.attach(dir, store, snapshot = "v1")
+    val v2 = Seq(40L -> "the quick brown fox jumps over the lazy dog",
+      41L -> "pack my box with five dozen liquor jugs", 42L -> "sphinx of black quartz")
+    try {
+      q79(spark, dir).collect()
+      writeDocs(dir, v2)
+      val got = q79(spark, dir).as[(Long, Long, Long)].collect().toSeq
+      val freshDir = Files.createTempDirectory("graft-tokscope-fresh").toString
+      writeDocs(freshDir, v2)
+      val want = q79(spark, freshDir).as[(Long, Long, Long)].collect().toSeq
+      assert(got === want, "q79 served the LM trained on the old documents")
+      SessionCache.invalidate(freshDir)
+    } finally SignatureStore.detach(dir)
+  }
+
+  test("q24, q40 and q45 share one pair-graph build: the counters show " +
+    "one miss and two hits") {
+    val dir = Files.createTempDirectory("graft-counters").toString
+    val base = "the quick brown fox jumps over the lazy dog again and again " * 4
+    writeDocs(dir, Seq(1L -> base, 2L -> (base + " tail"), 3L -> ("zebra quartz " * 20)))
+    val before = TextOps.pairsCache.stats
+    Seq("q24_minhash_lsh", "q40_dedup_clusters", "q45_sim_centrality")
+      .foreach(q => SparkEntry.queries(q)(spark, dir).collect())
+    val after = TextOps.pairsCache.stats
+    assert(after.misses - before.misses === 1)
+    assert(after.hits - before.hits === 2)
+    assert(after.buildSeconds > before.buildSeconds)
+    SessionCache.invalidate(dir)
+  }
+
+  test("ending a context's application evicts its session-cache entries " +
+    "and releases their checkpoints") {
+    val dir = Files.createTempDirectory("graft-stop").toString
+    val base = "lorem ipsum dolor sit amet consectetur adipiscing elit " * 5
+    writeDocs(dir, Seq(1L -> base, 2L -> (base + " tail"), 3L -> ("quartz " * 30)))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    SparkEntry.queries("q24_minhash_lsh")(spark, dir).collect()
+    val ckIds = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(ckIds.nonEmpty, "expected localCheckpoint blocks for the cached gate")
+    // the shared test context cannot stop: deliver its application-end
+    // event to the hook the cache registered on it
+    val hook = SessionCache.stopHook(spark.sparkContext)
+    assert(hook.isDefined, "no stop hook registered on the context")
+    hook.get.onApplicationEnd(SparkListenerApplicationEnd(System.currentTimeMillis()))
+    val left = SessionCache.stats.filter(_._2.entries > 0)
+    assert(left.isEmpty, s"entries outlived their context: $left")
+    val live = spark.sparkContext.getPersistentRDDs.keySet
+    assert(ckIds.forall(id => !live.contains(id)),
+      s"evicted checkpoint blocks still pinned: ${ckIds.intersect(live)}")
   }
 
   test("attachStore routes the session intermediates through the store") {
@@ -124,7 +191,7 @@ class SignatureStoreSpec extends AnyFunSuite {
       val pairs = TextOps.lshCandidatePairs(spark, dir)
         .as[(Long, Long)].collect().toSet
       assert(pairs === freshPairs)
-    } finally TextOps.detachStore(dir)
+    } finally SignatureStore.detach(dir)
     // detached: back to text-derived signatures
     val planAfter = TextOps.perDocSignatures(spark, dir)
       .queryExecution.executedPlan.toString
