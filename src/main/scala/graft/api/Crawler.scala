@@ -318,28 +318,21 @@ final class Crawler(
 
   /** node-crawler `crawler.direct(...)` [PK:med]: fetch ONE URL
     * immediately, bypassing the frontier, the seen set, and the rate
-    * limiter — same content path (canonicalize → fetch → extract), no
-    * scheduling state touched. None = the URL doesn't canonicalize or
-    * robots forbids it (direct() still respects robots: it shares the
-    * admission content rule, not the queue). */
+    * limiter — same content path (admission rule → FetchSource seam →
+    * extract), no scheduling state touched. None = the URL doesn't
+    * canonicalize or robots forbids it (direct() still respects robots:
+    * it shares the admission content rule, not the queue). */
   def direct(uri: String, retryCount: Int = 0): Option[graft.core.FetchResult] =
-    graft.core.UrlCanonicalizer.canonicalize(uri)
-      .filter { u =>
-        val host = graft.core.UrlCanonicalizer.hostOf(u)
-        graft.core.RobotsMatcher.allows(web.policy(host).rules,
-          graft.core.UrlCanonicalizer.pathOf(u))
-      }
-      .map { u =>
-        // direct() sends the configured identity (UA/referer) like any
-        // request, but bypasses the jar along with the rest of the
-        // scheduler state (no round, no cookie visibility rule)
-        val cfg = engine.cfg
-        val ctx = graft.core.RequestCtx(
-          graft.core.HttpIdentity.uaFor(cfg, null, 0L),
-          cookie = false,
-          referer = cfg.referer.orNull)
-        graft.core.Fetcher.fetch(web, u, retryCount, cfg, ctx = ctx)
-      }
+    graft.core.RobotsMatcher.admit(web, uri).map { case (canon, _) =>
+      // direct() sends the configured identity (UA/referer) like any
+      // request, but bypasses the jar along with the rest of the
+      // scheduler state (no round, no cookie visibility rule)
+      val cfg = engine.cfg
+      val req = graft.core.FetchRequest(canon, retryCount,
+        ctx = graft.core.HttpIdentity.ctxFor(cfg, null, 0L, cookie = false))
+      val source = new graft.core.SyntheticFetchSource(web, cfg)
+      try source.fetch(req) finally source.close()
+    }
 
   /** Flush queued requests and run rounds until drain (no admissible
     * candidates) or `maxRounds` — the `drain` event, as a return. */

@@ -1,20 +1,25 @@
 package graft.core
 
-/** Pluggable fetch source (SURVEY.md §2.1 S3) — the production seam
-  * node-crawler fills with its HTTP client pool [PK:high].
+/** Pluggable fetch source (SURVEY.md §2.1 S3) — the seam node-crawler
+  * fills with its HTTP client pool [PK:high], and the one the crawl
+  * engine fetches through: its `fetch_extract` expression
+  * ([[graft.functions.FetchExtractExpr]]) holds a serializable factory
+  * and calls `fetch` once per admitted row, as does `Crawler.direct`.
   *
-  * Lifecycle contract: ONE instance per partition per stage (created
-  * by the factory inside the task, closed when the partition ends), so
-  * an HTTP implementation owns a connection pool / DNS cache / rate
-  * limiter per task, exactly like node-crawler's per-worker agent. The
-  * zero-egress sandbox ships only the deterministic synthetic source;
-  * a production `HttpFetchSource` drops into the same seam:
+  * Lifecycle contract ([[TaskScoped]]): ONE instance per task, created
+  * by the factory inside the task on its first row and closed when the
+  * task completes (early termination included), so an HTTP
+  * implementation owns a connection pool / DNS cache / rate limiter per
+  * task, exactly like node-crawler's per-worker agent. The project
+  * ships only the deterministic synthetic source; a production
+  * `HttpFetchSource` drops into the same seam:
   *
   * {{{
   * final class HttpFetchSource(timeoutMs: Int) extends FetchSource {
-  *   private val pool = buildPooledClient(timeoutMs)   // per partition
-  *   def fetch(urlCanon: String, retryCount: Int): FetchResult = {
-  *     val resp = pool.get(urlCanon)                   // honors gzip etc.
+  *   private val pool = buildPooledClient(timeoutMs)   // per task
+  *   def fetch(req: FetchRequest): FetchResult = {
+  *     val resp = pool.send(req.method, req.urlCanon, req.headers,
+  *       req.ctx)                                      // honors gzip etc.
   *     if (!resp.is2xx) FetchResult(ok = false, Nil, Nil)
   *     else {
   *       val body = CharsetSniffer.decode(resp.bytes, resp.contentType)
@@ -25,57 +30,31 @@ package graft.core
   *   override def close(): Unit = pool.shutdown()
   * }
   * }}}
-  *
-  * The engine's hot path uses the native FetchExtractExpr for the
-  * synthetic source (no per-row encoder layer); `FetchSource.mapFetch`
-  * is the generic mapPartitions form any source (HTTP included) runs
-  * through, with the same output schema.
   */
+trait FetchSource extends AutoCloseable {
+  def fetch(req: FetchRequest): FetchResult
+  override def close(): Unit = ()
+}
+
 /** One fetch task as the seam sees it: canonical URL, retry ordinal,
   * the per-request HTTP options node-crawler's `queue()` carries
   * (`method`, `headers` as an opaque serialized map; null = source
-  * defaults — GET, no extra headers) [PK:high], plus the scheduler
-  * inputs the HTTP identity resolution needs: `discoveredSeq` (the
-  * deterministic request ordinal UA/proxy rotation keys on) and the
-  * resolved cookie-jar bit (jar state belongs to the SCHEDULER — the
-  * seam just presents it). */
+  * defaults — GET, no extra headers) [PK:high], and the HTTP identity
+  * the caller already resolved ([[HttpIdentity.ctxFor]] — UA, referer,
+  * and the cookie-jar bit, whose state belongs to the scheduler). */
 final case class FetchRequest(urlCanon: String, retryCount: Int,
     method: String = null, headers: String = null,
-    discoveredSeq: Long = 0L, cookie: Boolean = false)
-
-trait FetchSource {
-  def fetch(urlCanon: String, retryCount: Int): FetchResult
-  /** Options-aware form; sources that honor method/headers override
-    * this (the synthetic source is method-insensitive by nature). */
-  def fetch(req: FetchRequest): FetchResult =
-    fetch(req.urlCanon, req.retryCount)
-  def close(): Unit = ()
-}
+    ctx: RequestCtx = RequestCtx.Empty)
 
 /** The sandbox source: deterministic synthetic web (shared with the
   * reference simulator). Honors per-request method/headers (HEAD,
-  * Accept-Encoding negotiation) AND the HTTP identity options via the
-  * same [[HttpIdentity]] resolution the engine's FetchExtractExpr and
-  * the simulator run — the seam serves identical content for the
-  * identical cfg, whichever path fetches. CONTRACT: UA/proxy rotation
-  * and the cookie jar key on SCHEDULER inputs (`discoveredSeq`,
-  * `cookie`) that only the [[FetchRequest]] form carries; the
-  * request-less `fetch(url, retry)` form resolves them at their
-  * defaults (ordinal 0 — the pool's FIRST UA — and no cookie), so a
-  * rotating/jar-aware pipeline must drive the FetchRequest seam
-  * (`mapFetchRequests`). */
+  * Accept-Encoding negotiation) and the request's identity, so it
+  * serves what the simulator serves for the same request. */
 final class SyntheticFetchSource(web: SyntheticWeb, cfg: CrawlConfig)
     extends FetchSource {
-  def fetch(urlCanon: String, retryCount: Int): FetchResult =
-    fetch(FetchRequest(urlCanon, retryCount))
-  override def fetch(req: FetchRequest): FetchResult = {
-    val ctx = RequestCtx(
-      HttpIdentity.uaFor(cfg, req.headers, req.discoveredSeq),
-      req.cookie,
-      HttpIdentity.refererFor(cfg, req.headers))
+  def fetch(req: FetchRequest): FetchResult =
     Fetcher.fetch(web, req.urlCanon, req.retryCount, cfg, req.method,
-      req.headers, ctx)
-  }
+      req.headers, req.ctx)
 }
 
 /** Timeout decorator for any [[FetchSource]] — node-crawler's
@@ -84,13 +63,13 @@ final class SyntheticFetchSource(web: SyntheticWeb, cfg: CrawlConfig)
   * interrupted) and reported as a failed attempt (`ok = false`), which
   * the engine's retry/backoff machinery reschedules exactly like any
   * transient fetch failure; errors thrown by the inner source
-  * propagate unchanged (the partition lifecycle still closes both).
+  * propagate unchanged (the task lifecycle still closes both).
   *
   * A blocking HTTP client cannot be trusted to honor its own timeout
   * (DNS stalls, TLS handshakes and dead TCP peers routinely escape
   * client-level timeouts), so enforcement needs a watchdog: one daemon
-  * executor thread per source — i.e. per partition, thanks to the
-  * per-partition lifecycle — so the cost is O(tasks), not O(rows). */
+  * executor thread per source — i.e. per task, thanks to the
+  * task-scoped lifecycle — so the cost is O(tasks), not O(rows). */
 final class TimeoutFetchSource(inner: FetchSource, timeoutMs: Long)
     extends FetchSource {
   import java.util.concurrent.{Callable, ExecutionException, Executors,
@@ -101,9 +80,7 @@ final class TimeoutFetchSource(inner: FetchSource, timeoutMs: Long)
       val t = new Thread(r, "graft-fetch-watchdog"); t.setDaemon(true); t
     })
   private var exec = mkExec()
-  def fetch(urlCanon: String, retryCount: Int): FetchResult =
-    fetch(FetchRequest(urlCanon, retryCount))
-  override def fetch(req: FetchRequest): FetchResult = {
+  def fetch(req: FetchRequest): FetchResult = {
     val running = new AtomicBoolean(false)
     val fut = exec.submit(new Callable[FetchResult] {
       def call(): FetchResult = {
@@ -118,7 +95,7 @@ final class TimeoutFetchSource(inner: FetchSource, timeoutMs: Long)
         // an UNINTERRUPTIBLE inner call (blocking DNS, native I/O) keeps
         // the watchdog thread occupied after the cancel — if so, abandon
         // the executor and give later fetches a fresh thread; otherwise
-        // every subsequent fetch in the partition would queue behind the
+        // every subsequent fetch in the task would queue behind the
         // stuck one and falsely time out, cascading ok=false. Stuckness
         // is judged by the EXECUTOR's active count, not only the
         // callable's own flag — that closes the (theoretical) window
@@ -138,80 +115,5 @@ final class TimeoutFetchSource(inner: FetchSource, timeoutMs: Long)
   override def close(): Unit = {
     exec.shutdownNow()
     inner.close()
-  }
-}
-
-object FetchSource {
-
-  /** Per-partition fetch: one source per partition (pooled client
-    * lifecycle), closed even on failure. `factory` must be
-    * serializable; the source itself never leaves the task.
-    *
-    * Cleanup is registered on the Spark TaskContext when one exists, so
-    * the source closes even if the downstream operator stops consuming
-    * early (limit/take/show) and the iterator is never drained — the
-    * drain/throw hooks below remain as the fallback outside a task
-    * (plain unit tests) and for eager release on full consumption. */
-  def fetchPartition[T](
-      it: Iterator[(String, Int)],
-      factory: () => FetchSource)(
-      out: (String, Int, FetchResult) => T): Iterator[T] = {
-    val source = factory()
-    var closed = false
-    def closeOnce(): Unit = if (!closed) { closed = true; source.close() }
-    Option(org.apache.spark.TaskContext.get())
-      .foreach(_.addTaskCompletionListener[Unit](_ => closeOnce()))
-    new Iterator[T] {
-      def hasNext: Boolean = {
-        val h = it.hasNext
-        if (!h) closeOnce()
-        h
-      }
-      def next(): T = {
-        val (url, retry) = it.next()
-        try out(url, retry, source.fetch(url, retry))
-        catch { case e: Throwable => closeOnce(); throw e }
-      }
-    }
-  }
-
-  /** Generic Dataset fetch operator over (url_canon, retry_count)
-    * rows — the mapPartitions seam an HTTP source plugs into. */
-  def mapFetch(ds: org.apache.spark.sql.Dataset[(String, Int)],
-      factory: () => FetchSource):
-      org.apache.spark.sql.Dataset[(String, Boolean, Seq[Span], Seq[DiscoveredLink])] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      fetchPartition(it, factory)((url, _, r) => (url, r.ok, r.spans, r.links))
-    }
-  }
-
-  /** Options-aware form of [[mapFetch]]: per-request method/headers ride
-    * to the source (same per-partition lifecycle). */
-  def mapFetchRequests(ds: org.apache.spark.sql.Dataset[FetchRequest],
-      factory: () => FetchSource):
-      org.apache.spark.sql.Dataset[(String, Boolean, Seq[Span], Seq[DiscoveredLink])] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      val source = factory()
-      var closed = false
-      def closeOnce(): Unit = if (!closed) { closed = true; source.close() }
-      Option(org.apache.spark.TaskContext.get())
-        .foreach(_.addTaskCompletionListener[Unit](_ => closeOnce()))
-      new Iterator[(String, Boolean, Seq[Span], Seq[DiscoveredLink])] {
-        def hasNext: Boolean = {
-          val h = it.hasNext
-          if (!h) closeOnce()
-          h
-        }
-        def next(): (String, Boolean, Seq[Span], Seq[DiscoveredLink]) = {
-          val req = it.next()
-          try {
-            val r = source.fetch(req)
-            (req.urlCanon, r.ok, r.spans, r.links)
-          } catch { case e: Throwable => closeOnce(); throw e }
-        }
-      }
-    }
   }
 }

@@ -2,10 +2,9 @@ package graft.core
 
 /** The deterministic synthetic "HTTP" fetch + extract step
   * (SURVEY.md §2.1 S3 + §2.7 F6/F7), shared verbatim between the Spark
-  * engine's per-partition fetcher and the reference simulator. This is
-  * content, not scheduling: in a real deployment this function is
-  * replaced by a pooled HTTP client inside `mapPartitions` with the same
-  * signature.
+  * engine's [[SyntheticFetchSource]] and the reference simulator. This
+  * is content, not scheduling: in a real deployment a pooled HTTP
+  * client replaces it behind the same [[FetchSource]] seam.
   */
 object Fetcher {
   /** Fetch outcome: `ok=false` models a transient failure (retryable);

@@ -291,6 +291,13 @@ object HttpIdentity {
     cfg.referer.orNull
   }
 
+  /** The request identity the fetch seam receives ([[FetchRequest]]):
+    * UA and referer resolved from (cfg, headers, seq), plus the
+    * scheduler's cookie-jar bit. */
+  def ctxFor(cfg: CrawlConfig, headers: String, seq: Long,
+      cookie: Boolean): RequestCtx =
+    RequestCtx(uaFor(cfg, headers, seq), cookie, refererFor(cfg, headers))
+
   /** Proxy-pool rotation by request ordinal (recorded on the attempt
     * row; transport-only). */
   def proxyFor(cfg: CrawlConfig, seq: Long): String =

@@ -25,6 +25,17 @@ object RobotsMatcher {
     bestAllow
   }
 
+  /** The admission content rule for seeds, discovered links and
+    * `Crawler.direct`: canonicalize `raw` and keep it only if its host's
+    * robots rules allow its path. Returns (canonical URL, host). */
+  def admit(web: SyntheticWeb, raw: String): Option[(String, String)] =
+    UrlCanonicalizer.canonicalize(raw).flatMap { canon =>
+      val host = UrlCanonicalizer.hostOf(canon)
+      if (allows(web.policy(host).rules, UrlCanonicalizer.pathOf(canon)))
+        Some((canon, host))
+      else None
+    }
+
   /** A host's parsed robots policy: admission rules for the selected
     * agent group, plus its Crawl-delay (milliseconds) when present —
     * the robots-supplied politeness budget that feeds

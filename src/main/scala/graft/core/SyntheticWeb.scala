@@ -7,7 +7,7 @@ import Hashing.{draw, pmod, xxhash64}
   * There is no network in the sandbox (zero egress), so the "fetch
   * source" (SURVEY.md §2.1 S3) is a pure function: page bytes for a URL
   * are a seeded deterministic function of `xxhash64(url_canon)`. Both
-  * the Spark engine's per-partition fetcher and the single-threaded
+  * the Spark engine's fetch source and the single-threaded
   * reference simulator call the same generator, so they observe
   * identical content — scheduling differences remain the thing under
   * test.

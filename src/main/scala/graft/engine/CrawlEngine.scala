@@ -544,16 +544,6 @@ final class CrawlEngine(
         .orderBy($"round", $"priority", $"discovered_seq", $"url_hash"))
       .getOrElse(spark.emptyDataFrame)
 
-  private val timing = sys.env.get("SPARK_GRAFT_TIMING").contains("1")
-  private def timed[T](label: String, r: Long)(f: => T): T = {
-    if (!timing) f else {
-      val t0 = System.nanoTime()
-      val out = f
-      println(f"[timing] r=$r $label%-18s ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      out
-    }
-  }
-
   /** One fully-synchronous round (public API compatibility): compute,
     * commit, and report. `run()` instead pipelines consecutive rounds
     * via `roundCore`. */
@@ -646,12 +636,14 @@ final class CrawlEngine(
     // fetch+encode stage: the window leaves host-hash partitioning,
     // whose skew (mega-host) would otherwise become a straggler task
     // in the most expensive stage of the round. The fetch itself is
-    // the native FetchExtractExpr expression — Catalyst internal rows
-    // end-to-end, no case-class/encoder layer (SURVEY.md §2.8).
+    // the native FetchExtractExpr expression calling the FetchSource
+    // seam (one source per task) — Catalyst internal rows end-to-end,
+    // no case-class/encoder layer (SURVEY.md §2.8).
     val fetchCol = ColumnShim.column(graft.functions.FetchExtractExpr(
       ColumnShim.expression($"url_canon"),
       ColumnShim.expression($"retry_count"),
-      ColumnShim.expression($"discovered_seq"), w, c, c.packedSpans,
+      ColumnShim.expression($"discovered_seq"), w, c,
+      () => new SyntheticFetchSource(w, c), c.packedSpans,
       method = Some(ColumnShim.expression($"method")),
       headers = Some(ColumnShim.expression($"headers")),
       cookie = Some(ColumnShim.expression($"cookie_in"))))
@@ -703,9 +695,7 @@ final class CrawlEngine(
       count(lit(1)).as("n"),
       sum(when($"ok", 1L).otherwise(0L)).as("n_ok"),
       sum(size($"links")).as("n_links"))
-    val attemptsFile = timed("fetch_stage", r) {
-      ice.writeData(observed, ATTEMPTS, s"r$r")
-    }
+    val attemptsFile = ice.writeData(observed, ATTEMPTS, s"r$r")
     val metrics = obs.get
     def metric(k: String): Long = metrics.get(k) match {
       case Some(v: Long) => v
@@ -752,12 +742,10 @@ final class CrawlEngine(
         // metadata-count job in the tail
         val obsR = org.apache.spark.sql.Observation(
           s"retired-r$r-${CrawlEngine.obsId.incrementAndGet()}")
-        val f = timed("retired_write", r) {
-          ice.writeData(
-            updates.filter($"state" =!= FrontierEntry.Pending)
-              .observe(obsR, count(lit(1)).as("n")),
-            RETIRED, s"r$r")
-        }
+        val f = ice.writeData(
+          updates.filter($"state" =!= FrontierEntry.Pending)
+            .observe(obsR, count(lit(1)).as("n")),
+          RETIRED, s"r$r")
         val n = obsR.get.get("n") match {
           case Some(v: Number) => v.longValue()
           case _ => 0L
@@ -768,14 +756,14 @@ final class CrawlEngine(
 
     // the previous round's commit tail must land before the dedup
     // cogroup reads the pinned bloom/retired tables
-    timed("tail_await", r) { awaitTail() }
+    awaitTail()
 
     // link discovery: flatten (links column only), then ONE shuffle on
     // host_bucket does both the within-round min-seq dedup and the
     // bloom prefilter — same-URL candidates share their host, hence
     // their host_bucket, so they co-locate in the cogroup (J1/J2/A2).
     val flat = attempts.select(explode($"links").as("l")).select("l.*")
-    val tagged = timed("bloom_tag", r) { bloomTag(flat) }
+    val tagged = bloomTag(flat)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val definitelyNew = tagged.filter(!$"maybe_seen")
     // the exact check only runs for the bloom-positive minority; the
@@ -804,10 +792,8 @@ final class CrawlEngine(
     // shuffle wins on wall clock. (At 10^10-frontier scale the endgame
     // is a bucketed co-partitioned storage join; both forms here keep
     // the exact same semantics.)
-    val bcastMax =
-      sys.env.get("SPARK_GRAFT_BCAST_MAX").map(_.toLong).getOrElse(500000L)
     val attemptKeys =
-      if (nAdmitted <= bcastMax) broadcast(attempts.select($"url_hash"))
+      if (nAdmitted <= 500000L) broadcast(attempts.select($"url_hash"))
       else attempts.select($"url_hash")
     val cols = updates.columns.map(col)
     val newPending = pend.select(cols: _*)
@@ -815,9 +801,7 @@ final class CrawlEngine(
       .select(cols: _*)
       .unionByName(updates.filter($"state" === FrontierEntry.Pending))
       .unionByName(newEntries.select(cols: _*))
-    val pendingFile = timed("frontier_write", r) {
-      ice.writeData(newPending, FRONTIER, s"r$r")
-    }
+    val pendingFile = ice.writeData(newPending, FRONTIER, s"r$r")
     tagged.unpersist()
     val pendingFiles = Seq(pendingFile)
     carriedPending = Some((r + 1, pendingFiles))
@@ -857,12 +841,9 @@ final class CrawlEngine(
       .select($"host_bucket", $"url_hash")
       .repartition($"host_bucket")
     val deltaDf = bloomDelta(newRows)
-    val bloomFile = timed("bloom_enq", r) {
-      ice.writeData(deltaDf, BLOOM, s"r$r")
-    }
-    val enqRows = timed("enq_count", r) {
+    val bloomFile = ice.writeData(deltaDf, BLOOM, s"r$r")
+    val enqRows =
       spark.read.parquet(bloomFile).select($"host_bucket", $"n").collect()
-    }
     val enqByBucket = enqRows.groupBy(_.getInt(0))
       .map { case (b, rs) => b -> rs.map(_.getLong(1)).sum }
     val nEnqueued = enqByBucket.valuesIterator.sum
@@ -882,7 +863,7 @@ final class CrawlEngine(
           .toDF("round", "host_bucket", "admitted", "fetched_ok", "failed",
             "enqueued")
           .coalesce(1)
-        Some(timed("lineage_write", r) { ice.writeData(lineageDf, LINEAGE, s"r$r") })
+        Some(ice.writeData(lineageDf, LINEAGE, s"r$r"))
       } else None
 
     // ---- commits: side tables first (parented at the pins), then the
@@ -910,7 +891,7 @@ final class CrawlEngine(
     // compaction: squash the accumulated deltas into one blob per
     // bucket so the merge-on-read OR stays O(1) per bucket
     if (bloomSnap >= 0 && (r + 1) % c.bloomCompactEvery == 0)
-      bloomSnap = timed("bloom_compact", r) { compactBloom(bloomSnap) }
+      bloomSnap = compactBloom(bloomSnap)
 
     ice.commit(FRONTIER, pendingFiles, append = false,
       Map("round" -> (r + 1).toString,
@@ -929,11 +910,9 @@ final class CrawlEngine(
     // never-committed dirs must not be swept here; crash leftovers are
     // reclaimed by IceLite.removeOrphans at quiescence (Iceberg's
     // expire_snapshots / remove_orphan_files split).
-    timed("snapshot_gc", r) {
-      c.retainSnapshots.foreach { k =>
-        Seq(FRONTIER, BLOOM, ATTEMPTS, RETIRED, LINEAGE)
-          .foreach(t => ice.expireSnapshots(t, k, sweepOrphans = false))
-      }
+    c.retainSnapshots.foreach { k =>
+      Seq(FRONTIER, BLOOM, ATTEMPTS, RETIRED, LINEAGE)
+        .foreach(t => ice.expireSnapshots(t, k, sweepOrphans = false))
     }
 
     TailDone(r, nEnqueued)
@@ -1062,47 +1041,23 @@ object CrawlEngine {
         t
       }))
 
-  /** A discovered-link candidate (pre-dedup). */
-  final case class LinkCand(url_canon: String, url_hash: Long, host: String,
-      host_bucket: Int, priority: Int, discovered_seq: Long)
-
   /** Candidate row shape for the executor-side bloom cogroup. */
   final case class Cand(url_hash: Long, url_canon: String, host: String,
       host_bucket: Int, priority: Int, discovered_seq: Long)
   final case class TaggedCand(url_hash: Long, url_canon: String, host: String,
       host_bucket: Int, priority: Int, discovered_seq: Long, maybe_seen: Boolean)
 
-  /** A fetch attempt outcome (one row per admitted URL per round). */
-  final case class Attempt(
-      url: String, url_canon: String, url_hash: Long, host: String,
-      host_bucket: Int, priority: Int, discovered_seq: Long,
-      retry_count: Int, ok: Boolean, has_doc: Boolean,
-      spans: Seq[Span], links: Seq[LinkCand])
-
-  /** Canonicalize + robots-gate one raw URL into a frontier candidate
-    * (shared content rule; scheduling stays engine-side). */
-  def toCand(web: SyntheticWeb, raw: String, priority: Int, seq: Long,
-      numBuckets: Int): Option[LinkCand] =
-    UrlCanonicalizer.canonicalize(raw).flatMap { canon =>
-      val host = UrlCanonicalizer.hostOf(canon)
-      val path = UrlCanonicalizer.pathOf(canon)
-      if (!RobotsMatcher.allows(web.policy(host).rules, path)) None
-      else Some(LinkCand(canon, Hashing.xxhash64(canon), host,
-        Hashing.hostBucket(host, numBuckets), priority, seq))
-    }
-
+  /** Canonicalize + robots-gate one raw seed URL into a pending
+    * frontier entry (shared content rule; scheduling stays engine-side).
+    * url is stored NULL when canonicalization was the identity — the
+    * duplicate string never enters the frontier (public views coalesce
+    * it back; see pendingRaw's scaladoc). */
   def toEntry(web: SyntheticWeb, raw: String, priority: Int, seq: Long,
       due: Long, cfg: CrawlConfig): Option[FrontierEntry] =
-    UrlCanonicalizer.canonicalize(raw).flatMap { canon =>
-      val host = UrlCanonicalizer.hostOf(canon)
-      val path = UrlCanonicalizer.pathOf(canon)
-      if (!RobotsMatcher.allows(web.policy(host).rules, path)) None
-      // url is stored NULL when canonicalization was the identity —
-      // the duplicate string never enters the frontier (public views
-      // coalesce it back; see pendingRaw's scaladoc)
-      else Some(FrontierEntry(if (raw == canon) null else raw, canon,
+    RobotsMatcher.admit(web, raw).map { case (canon, host) =>
+      FrontierEntry(if (raw == canon) null else raw, canon,
         Hashing.xxhash64(canon), host,
         Hashing.hostBucket(host, cfg.numBuckets), priority, seq, 0, due,
-        FrontierEntry.Pending))
+        FrontierEntry.Pending)
     }
 }

@@ -12,7 +12,14 @@ import graft.core._
 /** `fetch_extract(url_canon, retry_count, discovered_seq)` — the crawl
   * engine's fetch + decode + extract step as a native Catalyst
   * expression (SURVEY.md §2.8 preference order: custom Expression over
-  * UDF over mapPartitions).
+  * UDF over mapPartitions), and the engine's only fetch operator.
+  *
+  * The fetch itself goes through the [[FetchSource]] seam: `source` is
+  * a serializable factory, opened once per task on its first row and
+  * closed when the task completes ([[TaskScoped]]). The expression
+  * resolves the row's HTTP identity once ([[HttpIdentity.ctxFor]]) and
+  * hands the source a [[FetchRequest]]; it then canonicalizes and
+  * robots-gates the discovered links (robots rules from `web`).
   *
   * Compared to the typed-Dataset formulation this skips an entire
   * materialization layer: no tuple decode, no Scala case-class
@@ -31,6 +38,7 @@ case class FetchExtractExpr(
     discoveredSeq: Expression,
     web: SyntheticWeb,
     cfg: CrawlConfig,
+    source: () => FetchSource,
     packedSpans: Boolean = false,
     // per-request HTTP options (node-crawler `queue({method, headers})`
     // [PK:high]); None = source defaults. Nullable columns — link-
@@ -54,6 +62,7 @@ case class FetchExtractExpr(
 
   @transient private lazy val TEXT = UTF8String.fromString("text")
   @transient private lazy val MEDIA = UTF8String.fromString("media")
+  @transient private lazy val sources = new TaskScoped(source)
 
   override def eval(input: InternalRow): Any = {
     val canonAny = urlCanon.eval(input)
@@ -80,11 +89,11 @@ case class FetchExtractExpr(
     val seq = seqAny.asInstanceOf[Long]
     // resolved identity — recorded on the attempt row (output struct)
     // and honored by identity-sensitive hosts
-    val ua = HttpIdentity.uaFor(cfg, headersStr, seq)
+    val ctx = HttpIdentity.ctxFor(cfg, headersStr, seq, cookieSent)
+    val ua = ctx.userAgent
     val proxy = HttpIdentity.proxyFor(cfg, seq)
-    val referer = HttpIdentity.refererFor(cfg, headersStr)
-    val res = Fetcher.fetch(web, canon, retry, cfg, methodStr, headersStr,
-      RequestCtx(ua, cookieSent, referer))
+    val req = FetchRequest(canon, retry, methodStr, headersStr, ctx)
+    val res = sources.use(_.fetch(req))
 
     val spansOut: Any =
       if (packedSpans) SpanCodec.pack(res.spans)
@@ -144,17 +153,14 @@ case class FetchExtractExpr(
 object CrawlEngine2 {
   def toCandRow(web: SyntheticWeb, raw: String, priority: Int, seq: Long,
       numBuckets: Int): Option[InternalRow] =
-    UrlCanonicalizer.canonicalize(raw).flatMap { canon =>
-      val host = UrlCanonicalizer.hostOf(canon)
-      val path = UrlCanonicalizer.pathOf(canon)
-      if (!RobotsMatcher.allows(web.policy(host).rules, path)) None
-      else Some(InternalRow(
+    RobotsMatcher.admit(web, raw).map { case (canon, host) =>
+      InternalRow(
         UTF8String.fromString(canon),
         Hashing.xxhash64(canon),
         UTF8String.fromString(host),
         Hashing.hostBucket(host, numBuckets),
         priority,
-        seq))
+        seq)
     }
 }
 

@@ -27,11 +27,11 @@ object MultimodalOps {
       format: String)
 
   /** Pluggable media-codec seam, mirroring `FetchSource`: ONE instance
-    * per partition per stage — created inside the task, closed when the
-    * partition ends (or the task completes early under a limit/take) —
-    * so a real codec owns its native buffers/handles per task. The
+    * per task — created inside the task on its first row, closed when
+    * the task completes (early termination under a limit/take included)
+    * — so a real codec owns its native buffers/handles per task. The
     * sandbox impl is the deterministic [[StubDecoder]]. */
-  trait Decoder {
+  trait Decoder extends AutoCloseable {
     def decode(payload: Array[Byte]): DecodedMeta
     /** Sample "frames" (index, value) from the payload. */
     def sampleFrames(payload: Array[Byte], stride: Int): Seq[(Int, Int)]
@@ -61,31 +61,18 @@ object MultimodalOps {
       val n = payload.length.toLong
       (n, if (n == 0) 0L else sum / n, mx, seen.cardinality().toLong)
     }
-    def close(): Unit = ()
+    override def close(): Unit = ()
   }
 
   object Decoder {
-    /** Per-partition decode: one decoder per partition, closed via the
-      * TaskContext on completion (covers early termination) with a
-      * drain-time fallback outside a task — same lifecycle contract as
-      * `FetchSource.fetchPartition`. */
+    /** Per-partition decode: one decoder per task, opened on its first
+      * row and closed on task completion (covers early termination) —
+      * the [[graft.core.TaskScoped]] lifecycle that the fetch seam uses
+      * too. */
     def decodePartition[R, T](it: Iterator[R], factory: () => Decoder)(
         f: (Decoder, R) => T): Iterator[T] = {
-      val dec = factory()
-      var closed = false
-      def closeOnce(): Unit = if (!closed) { closed = true; dec.close() }
-      Option(org.apache.spark.TaskContext.get())
-        .foreach(_.addTaskCompletionListener[Unit](_ => closeOnce()))
-      new Iterator[T] {
-        def hasNext: Boolean = {
-          val h = it.hasNext
-          if (!h) closeOnce()
-          h
-        }
-        def next(): T =
-          try f(dec, it.next())
-          catch { case e: Throwable => closeOnce(); throw e }
-      }
+      val ts = new graft.core.TaskScoped(factory)
+      it.map(r => ts.use(f(_, r)))
     }
   }
 

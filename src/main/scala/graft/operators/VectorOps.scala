@@ -171,12 +171,11 @@ object VectorOps {
 
   // ---- IVF parameters (shared by q36 and its oracle) ----
 
-  // nlist / train iterations / nprobe are env-configurable (the oracle
-  // SQL is generated from the same values, so parity holds for any
-  // setting chosen at JVM start)
-  val IvfK = sys.env.get("SPARK_GRAFT_IVF_NLIST").map(_.toInt).getOrElse(32)
-  val IvfIters = sys.env.get("SPARK_GRAFT_IVF_ITERS").map(_.toInt).getOrElse(2)
-  val IvfProbes = sys.env.get("SPARK_GRAFT_IVF_NPROBE").map(_.toInt).getOrElse(4)
+  // nlist / train iterations / nprobe (the oracle SQL is generated from
+  // the same values)
+  val IvfK = 32
+  val IvfIters = 2
+  val IvfProbes = 4
   val IvfRoundDp = 6
 
   /** q75 product-quantization geometry: M subvector blocks of Sub dims

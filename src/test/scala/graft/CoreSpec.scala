@@ -65,7 +65,11 @@ class CoreSpec extends AnyFunSuite {
       referer = Some("http://r.example/"))
     val src = new SyntheticFetchSource(web, cfg)
     val u2 = s"http://${web.hostName(2)}/p/1" // cloaking host
-    val got = src.fetch(FetchRequest(u2, 0, discoveredSeq = 3L))
+    // the caller resolves the identity once (as the engine's expression
+    // and Crawler.direct do); the source serves exactly that identity
+    val ctx = HttpIdentity.ctxFor(cfg, null, 3L, cookie = false)
+    assert(ctx === RequestCtx("sa/2", cookie = false, referer = "http://r.example/"))
+    val got = src.fetch(FetchRequest(u2, 0, ctx = ctx))
     val expect = Fetcher.fetch(web, u2, 0, cfg, null, null,
       RequestCtx(HttpIdentity.uaFor(cfg, null, 3L), cookie = false,
         referer = "http://r.example/"))
@@ -75,7 +79,7 @@ class CoreSpec extends AnyFunSuite {
     // the jar bit presented via the request is honored
     val u3 = s"http://${web.hostName(3)}/p/1" // personalizing host
     val anon = src.fetch(FetchRequest(u3, 0))
-    val auth = src.fetch(FetchRequest(u3, 0, cookie = true))
+    val auth = src.fetch(FetchRequest(u3, 0, ctx = RequestCtx(cookie = true)))
     assert(auth.spans.size === anon.spans.size + 1)
   }
 
@@ -419,25 +423,44 @@ class CoreSpec extends AnyFunSuite {
     final class Counting extends FetchSource {
       opened.add(1)
       private val inner = new SyntheticFetchSource(web, cfg)
-      def fetch(u: String, r: Int): FetchResult = inner.fetch(u, r)
+      def fetch(req: FetchRequest): FetchResult = inner.fetch(req)
       override def close(): Unit = closed.add(1)
     }
     import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.graftshim.ColumnShim
+    // the engine's fetch operator: fetch_extract over (url_canon,
+    // retry_count, discovered_seq) rows, through the counting source
+    def fetched(rows: Seq[(String, Int)]) =
+      rows.toDF("url_canon", "retry_count").repartition(4)
+        .select($"url_canon", ColumnShim.column(graft.functions.FetchExtractExpr(
+          ColumnShim.expression($"url_canon"),
+          ColumnShim.expression($"retry_count"),
+          ColumnShim.expression(lit(0L)), web, cfg, () => new Counting)).as("f"))
+        .select($"url_canon", $"f.ok", $"f.spans")
+        .as[(String, Boolean, Seq[Span])]
     val urls = (0 until 3).flatMap(h => (0 until 4).map(p =>
       (s"http://${web.hostName(h)}/p/$p", 0)))
-    val ds = spark.createDataset(urls).repartition(4)
-    val out = FetchSource.mapFetch(ds, () => new Counting).collect()
+    val out = fetched(urls).collect()
     assert(out.length === 12)
     assert(out.count(_._2) === urls.count { case (u, _) =>
       !web.fetchFails(u, 0, cfg) })
     // one source per non-empty partition, every one closed
     assert(opened.value === closed.value)
     assert(opened.value >= 1 && opened.value <= 4)
-    // content parity with the engine's native fetch path
+    // content parity with Fetcher.fetch
     val direct = urls.map { case (u, r) => Fetcher.fetch(web, u, r, cfg) }
     assert(out.sortBy(_._1).map(_._3) ===
       urls.sortBy(_._1).map { case (u, r) => Fetcher.fetch(web, u, r, cfg).spans })
     assert(direct.nonEmpty)
+    // early termination (limit): ~12 rows per partition, 3 taken — the
+    // task-completion listener still closes every source opened
+    val (o0, c0) = (opened.value, closed.value)
+    assert(fetched(urls.flatMap { case (u, _) => (0 until 4).map((u, _)) })
+      .limit(3).collect().length === 3)
+    assert(opened.value > o0, "limit run should open at least one source")
+    assert(opened.value - o0 === closed.value - c0,
+      s"source leak under early termination: opened=${opened.value} closed=${closed.value}")
   }
 
   test("decodeWith: incomingEncoding overrides sniffing; forceUTF8=false is byte-transparent") {
@@ -473,20 +496,20 @@ class CoreSpec extends AnyFunSuite {
     final class Stalling extends FetchSource {
       private var n = 0
       private val inner = new SyntheticFetchSource(web, cfg)
-      def fetch(u: String, r: Int): FetchResult = {
+      def fetch(req: FetchRequest): FetchResult = {
         n += 1
         if (n % 2 == 0) {
           try Thread.sleep(60000)
           catch { case _: InterruptedException => interrupted.incrementAndGet() }
           FetchResult(ok = false, Nil, Nil)
-        } else inner.fetch(u, r)
+        } else inner.fetch(req)
       }
       override def close(): Unit = innerClosed.incrementAndGet()
     }
     val src = new TimeoutFetchSource(new Stalling, timeoutMs = 150)
     val urls = (0 until 6).map(p => s"http://${web.hostName(0)}/p/$p")
     val t0 = System.nanoTime()
-    val out = urls.map(u => src.fetch(u, 0))
+    val out = urls.map(u => src.fetch(FetchRequest(u, 0)))
     val wallMs = (System.nanoTime() - t0) / 1e6
     // calls 2,4,6 (indices 1,3,5) stall -> forced ok=false; the others
     // hit the synthetic web and must match its direct answer
@@ -511,15 +534,16 @@ class CoreSpec extends AnyFunSuite {
     final class ResetOnce extends FetchSource {
       private val failed = scala.collection.mutable.Set[String]()
       private val inner = new SyntheticFetchSource(web, cfg)
-      def fetch(u: String, r: Int): FetchResult =
-        if (failed.add(u)) throw new java.io.IOException(s"connection reset: $u")
-        else inner.fetch(u, r)
+      def fetch(req: FetchRequest): FetchResult =
+        if (failed.add(req.urlCanon))
+          throw new java.io.IOException(s"connection reset: ${req.urlCanon}")
+        else inner.fetch(req)
     }
     val src = new TimeoutFetchSource(new ResetOnce, timeoutMs = 5000)
     val u = s"http://${web.hostName(1)}/p/0"
-    val e = intercept[java.io.IOException](src.fetch(u, 0))
+    val e = intercept[java.io.IOException](src.fetch(FetchRequest(u, 0)))
     assert(e.getMessage.contains("connection reset"))
-    val again = src.fetch(u, 1) // the engine reschedules with retryCount+1
+    val again = src.fetch(FetchRequest(u, 1)) // the engine reschedules with retryCount+1
     assert(again.ok === !web.fetchFails(u, 1, cfg))
     src.close()
   }

@@ -720,25 +720,47 @@ class EngineGoldenSpec extends AnyFunSuite {
         assert(h === q.headers, s"headers lost for $canon")
       }
     }
-    // the options-aware seam delivers method/headers to the source
-    val seen = scala.collection.mutable.Set.empty[(String, String)]
-    val src = new graft.core.FetchSource {
-      def fetch(u: String, r: Int): graft.core.FetchResult =
-        graft.core.Fetcher.fetch(web, u, r, cfg)
-      override def fetch(req: graft.core.FetchRequest): graft.core.FetchResult = {
-        seen += ((req.method, req.headers)); fetch(req.urlCanon, req.retryCount)
-      }
+    // the engine's fetch operator hands the source exactly each row's
+    // options and resolved identity (UA pool rotation, header overrides,
+    // referer, cookie bit), once per row
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.graftshim.ColumnShim
+    val idCfg = cfg.copy(userAgents = Seq("ua-a", "ua-b", "ua-c"),
+      rotateUA = true, referer = Some("http://r.example/"))
+    val rows = Seq(
+      ("http://h0001.example/p/1", 0, 3L, "HEAD", """{"a":"b"}""", true),
+      ("http://h0002.example/p/2", 1, 4L, null,
+        """{"user-agent":"own/1","referer":"http://own.example/"}""", false),
+      ("http://h0003.example/p/3", 0, 5L, "GET", null, true),
+      ("http://h0000.example/p/0", 2, 7L, null, null, false))
+    val seen = spark.sparkContext.collectionAccumulator[FetchRequest]("seam")
+    final class Recording extends FetchSource {
+      private val inner = new SyntheticFetchSource(web, idCfg)
+      def fetch(req: FetchRequest): FetchResult = { seen.add(req); inner.fetch(req) }
     }
-    val reqsIt = Iterator(graft.core.FetchRequest("http://h0001.example/p/1", 0,
-      "HEAD", """{"a":"b"}"""))
-    val out = graft.core.FetchSource.fetchPartition(
-      reqsIt.map(r => (r.urlCanon, r.retryCount)), () => src)((u, _, r) => u)
-    out.size // drain
-    // direct options-aware call (mapFetchRequests path exercises this
-    // same method via the Dataset seam)
-    src.fetch(graft.core.FetchRequest("http://h0001.example/p/1", 0,
-      "HEAD", """{"a":"b"}"""))
-    assert(seen.contains(("HEAD", """{"a":"b"}""")))
+    def e(c: String) = Some(ColumnShim.expression(col(c)))
+    val fetched = rows.toDF("url_canon", "retry_count", "discovered_seq",
+        "method", "headers", "cookie_in").repartition(2)
+      .select(ColumnShim.column(graft.functions.FetchExtractExpr(
+        e("url_canon").get, e("retry_count").get, e("discovered_seq").get,
+        web, idCfg, () => new Recording, method = e("method"),
+        headers = e("headers"), cookie = e("cookie_in"))).as("f"))
+      .select($"f.ua", $"f.cookie_sent").as[(String, Boolean)].collect()
+    assert(fetched.length === rows.size)
+    val expected = Seq(
+      FetchRequest("http://h0001.example/p/1", 0, "HEAD", """{"a":"b"}""",
+        RequestCtx("ua-a", cookie = true, referer = "http://r.example/")),
+      FetchRequest("http://h0002.example/p/2", 1, null,
+        """{"user-agent":"own/1","referer":"http://own.example/"}""",
+        RequestCtx("own/1", cookie = false, referer = "http://own.example/")),
+      FetchRequest("http://h0003.example/p/3", 0, "GET", null,
+        RequestCtx("ua-c", cookie = true, referer = "http://r.example/")),
+      FetchRequest("http://h0000.example/p/0", 2, null, null,
+        RequestCtx("ua-b", cookie = false, referer = "http://r.example/")))
+    assert(seen.value.asScala.toSeq.sortBy(_.urlCanon) === expected.sortBy(_.urlCanon))
+    // the attempt-row identity is the identity the source received
+    assert(fetched.toSeq.sorted ===
+      expected.map(q => (q.ctx.userAgent, q.ctx.cookie)).sorted)
   }
 
   test("lineage rows cover every active round with per-bucket metrics") {
