@@ -24,8 +24,16 @@ import graft.icelite.IceLite
   *    shrinks as the crawl matures); `retired` holds done/dropped rows
   *    and is APPEND-ONLY (per-round delta = the round's attempts), so
   *    per-round frontier I/O is independent of the total URL-seen set;
-  *  - both are hash-partitioned by `host_bucket` = pmod(xxhash64(host),
-  *    numBuckets) so per-host politeness decisions co-locate;
+  *  - every row carries `host_bucket` = pmod(xxhash64(host),
+  *    numBuckets), the key of the per-bucket seen sketches and of the
+  *    dedup cogroup (politeness co-locates through the dequeue window's
+  *    own shuffle on the limiter key). The stored files are not
+  *    bucket-partitioned: seed, enqueue, compaction and forget writes
+  *    cluster by `host_bucket` (each bucket wholly in one file, one file
+  *    per shuffle partition); the per-round pending rewrite is the union
+  *    of kept, retried and newly discovered rows, coalesced to at most
+  *    one file per core; a retired delta keeps the layout of the round's
+  *    attempts;
   *  - per-host politeness quota is a pure function of the host name,
   *    computed by a native expression (HostQuotaExpr) on the candidate
   *    rows — no per-round host-dim distinct/broadcast job, nothing that
@@ -118,9 +126,9 @@ final class CrawlEngine(
       entries.size / 100000 + 1)
     val df = spark.createDataset(
       spark.sparkContext.parallelize(entries, slices)).toDF()
-      .repartition(cfg.numBuckets, $"host_bucket")
+      .repartition($"host_bucket")
     val pendFile = ice.writeData(df, FRONTIER, "seed")
-    val seedRows = spark.read.parquet(pendFile)
+    val seedRows = ice.readFiles(spark, pendFile)
     val bloomFile = ice.writeData(
       bloomDelta(seedRows.select($"host_bucket", $"url_hash")), BLOOM, "seed")
     val bloomSnap = ice.commit(BLOOM, Seq(bloomFile), append = false)
@@ -203,9 +211,9 @@ final class CrawlEngine(
         spark.sparkContext.parallelize(entries, slices)).toDF()
       .join(frontier().select($"url_hash"), Seq("url_hash"), "left_anti")
       .select(cols.map(col).toSeq: _*)
-      .repartition(cfg.numBuckets, $"host_bucket")
+      .repartition($"host_bucket")
     val pendFile = ice.writeData(fresh, FRONTIER, "enqueue")
-    val newRows = spark.read.parquet(pendFile)
+    val newRows = ice.readFiles(spark, pendFile)
     val nFresh = newRows.count()
     if (nFresh == 0L) return 0L // every request was already seen
     val bloomFile = ice.writeData(
@@ -218,7 +226,7 @@ final class CrawlEngine(
   }
 
   /** Maintenance: squash the retired table's per-round append deltas
-    * into one bucket-partitioned file set — the Iceberg
+    * into one file set clustered by host_bucket — the Iceberg
     * `rewrite_data_files` analog. Retired accumulates one delta per
     * round; a 10⁵-round crawl would otherwise open 10⁵ small files on
     * every seen-set read. Quiescent operation (between runs): rewrites
@@ -230,7 +238,7 @@ final class CrawlEngine(
     awaitTail()
     readPinned(RETIRED).foreach { df =>
       val file = ice.writeData(
-        df.repartition(cfg.numBuckets, $"host_bucket"), RETIRED, "compact")
+        df.repartition($"host_bucket"), RETIRED, "compact")
       val snap = ice.commit(RETIRED, Seq(file), append = false)
       ice.commit(FRONTIER, Nil, append = true,
         props = ice.props(FRONTIER) + ("retired_snap" -> snap.toString))
@@ -291,7 +299,7 @@ final class CrawlEngine(
       else {
         val keep = df.filter(!dropCond)
         val file = ice.writeData(
-          keep.repartition(cfg.numBuckets, $"host_bucket"), RETIRED, "forget")
+          keep.repartition($"host_bucket"), RETIRED, "forget")
         val snap = ice.commit(RETIRED, Seq(file), append = false)
         ice.commit(FRONTIER, Nil, append = true,
           props = ice.props(FRONTIER) + ("retired_snap" -> snap.toString))
@@ -414,7 +422,7 @@ final class CrawlEngine(
   /** The pending set as round `r` must see it: the carried
     * not-yet-committed file when pipelining, else the committed table. */
   private def pendingView(r: Long): DataFrame = carriedPending match {
-    case Some((round, files)) if round == r => spark.read.parquet(files: _*)
+    case Some((round, files)) if round == r => ice.readFiles(spark, files: _*)
     case _ => awaitTail(); pendingRaw()
   }
 
@@ -474,10 +482,10 @@ final class CrawlEngine(
   /** Attempts reads, schema-evolution-safe across the HTTP-identity
     * upgrade: a pre-identity table — or a MIXED one, where this build
     * resumed an old state dir and appended new-schema deltas — always
-    * reads with the identity columns present. Single-footer inference
-    * stays the hot path; only a read whose inferred schema LACKS the
-    * identity columns (inference sampled an old file) pays the
-    * mergeSchema re-read, and `cookie_sent` is null-coalesced because
+    * reads with the identity columns present. The recorded-schema
+    * read stays the hot path; only a read whose schema LACKS the
+    * identity columns (an old dir sends the read to single-footer
+    * inference, which sampled an old file) pays the mergeSchema re-read, and `cookie_sent` is null-coalesced because
     * old files surface merged columns as null (identity was "none"). */
   /** Merged-schema attempts reads memoized per pinned snapshot id — a
     * pinned snapshot is immutable, so a pure pre-identity table pays
@@ -706,7 +714,7 @@ final class CrawlEngine(
     val nOk = metric("n_ok")
     val nDiscovered = metric("n_links")
     val nFailed = nAdmitted - nOk
-    val attempts = spark.read.parquet(attemptsFile)
+    val attempts = ice.readFiles(spark, attemptsFile)
     val newRetry = when($"ok", $"retry_count").otherwise($"retry_count" + 1)
     val nCandidates = -1L // derivable but not worth a frontier scan
 
@@ -801,7 +809,11 @@ final class CrawlEngine(
       .select(cols: _*)
       .unionByName(updates.filter($"state" === FrontierEntry.Pending))
       .unionByName(newEntries.select(cols: _*))
-    val pendingFile = ice.writeData(newPending, FRONTIER, s"r$r")
+    // a narrow coalesce to one file per core: the union would otherwise
+    // write one file per input partition of each leg, and every file
+    // is a write task now and a read partition next round
+    val pendingFile = ice.writeData(
+      newPending.coalesce(spark.sparkContext.defaultParallelism), FRONTIER, s"r$r")
     tagged.unpersist()
     val pendingFiles = Seq(pendingFile)
     carriedPending = Some((r + 1, pendingFiles))
@@ -833,7 +845,7 @@ final class CrawlEngine(
     // re-keyed by host_bucket (a shuffle of ONLY the new rows — the
     // pending write itself stays shuffle-free), then folded into
     // per-bucket bloom deltas.
-    val written = spark.read.parquet(newRowsFile)
+    val written = ice.readFiles(spark, newRowsFile)
     // partition count = session parallelism, NOT numBuckets: the
     // per-partition fold handles many buckets per task, and hashing on
     // host_bucket still puts each bucket wholly inside one partition
@@ -843,7 +855,7 @@ final class CrawlEngine(
     val deltaDf = bloomDelta(newRows)
     val bloomFile = ice.writeData(deltaDf, BLOOM, s"r$r")
     val enqRows =
-      spark.read.parquet(bloomFile).select($"host_bucket", $"n").collect()
+      ice.readFiles(spark, bloomFile).select($"host_bucket", $"n").collect()
     val enqByBucket = enqRows.groupBy(_.getInt(0))
       .map { case (b, rs) => b -> rs.map(_.getLong(1)).sum }
     val nEnqueued = enqByBucket.valuesIterator.sum

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** IceLite — a thin Iceberg-style snapshot/manifest layer over Parquet
   * (SURVEY.md §1.2 caveat: no Iceberg runtime jar exists in this
@@ -17,8 +18,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Layout per table:
   * {{{
   *   <root>/<table>/data/<label>-<uuid>/   parquet dirs (one per commit)
+  *   <root>/<table>/data/<label>-<uuid>/_schema.json   the dir's schema
   *   <root>/<table>/snapshot-<n>.json      manifest: file list + props
   * }}}
+  *
+  * Like Iceberg's table metadata, each data dir records its schema in
+  * `_schema.json`, written atomically after the Parquet files (Spark's
+  * file listing skips `_`-prefixed names). A read passes that schema to
+  * Spark and opens no footer to infer it; Parquet inference costs a
+  * one-task Spark job per read. Inference still runs when any dir of a
+  * read lacks the sidecar (dirs written before it existed, or rewritten
+  * outside IceLite), when the dirs' sidecars disagree (a table spanning
+  * a schema change), and on `mergeSchema` reads. No `_SUCCESS` marker
+  * is written: the manifest commit is what makes a dir visible.
   *
   * A manifest is committed by writing `snapshot-<n>.json.tmp` and
   * atomically renaming it. Data dirs not referenced by any manifest are
@@ -30,6 +42,7 @@ final class IceLite(rootDir: String) {
   private def tableDir(table: String): Path = Paths.get(rootDir, table)
 
   private val SnapRe = "snapshot-(\\d+)\\.json".r
+  private val SchemaFile = "_schema.json"
 
   def currentSnapshotId(table: String): Option[Long] = {
     val dir = tableDir(table)
@@ -61,17 +74,42 @@ final class IceLite(rootDir: String) {
     currentSnapshotId(table).map(manifest(table, _))
 
   /** Write a DataFrame as a new data dir for `table` (NOT yet visible —
-    * call commit). Returns the data dir path. */
-  def writeData(df: DataFrame, table: String, label: String,
-      partitionCols: Seq[String] = Nil): String = {
+    * call commit), recording `df.schema` in its `_schema.json` sidecar.
+    * Returns the data dir path. */
+  def writeData(df: DataFrame, table: String, label: String): String = {
     val dir = tableDir(table).resolve("data")
       .resolve(s"$label-${UUID.randomUUID().toString.take(8)}")
     Files.createDirectories(dir.getParent)
-    val w = df.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+    df.write.mode("overwrite")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .parquet(dir.toString)
+    val tmp = dir.resolve(".schema.json.tmp")
+    Files.writeString(tmp, df.schema.json)
+    Files.move(tmp, dir.resolve(SchemaFile), StandardCopyOption.ATOMIC_MOVE)
     dir.toString
   }
+
+  /** The schema every one of `dirs` recorded, if they all recorded the
+    * same one; None sends the read to Parquet inference. */
+  private def recordedSchema(dirs: Seq[String]): Option[StructType] = {
+    val recorded = dirs.map { d =>
+      val p = Paths.get(d, SchemaFile)
+      if (Files.isRegularFile(p)) Some(Files.readString(p)) else None
+    }.distinct
+    recorded match {
+      case Seq(Some(json)) => Some(DataType.fromJson(json).asInstanceOf[StructType])
+      case _               => None
+    }
+  }
+
+  /** Read data dirs written by [[writeData]] with their recorded schema
+    * (no inference job); dirs without one, or with differing ones, read
+    * through Parquet inference. */
+  def readFiles(spark: SparkSession, files: String*): DataFrame =
+    recordedSchema(files) match {
+      case Some(schema) => spark.read.schema(schema).parquet(files: _*)
+      case None         => spark.read.parquet(files: _*)
+    }
 
   /** Atomically commit a new snapshot. `append=true` carries forward the
     * base snapshot's file list; `append=false` replaces it.
@@ -112,9 +150,8 @@ final class IceLite(rootDir: String) {
 
   /** Convenience: writeData + commit in one step. */
   def writeCommit(df: DataFrame, table: String, label: String, append: Boolean,
-      props: Map[String, String] = Map.empty,
-      partitionCols: Seq[String] = Nil): Long = {
-    val f = writeData(df, table, label, partitionCols)
+      props: Map[String, String] = Map.empty): Long = {
+    val f = writeData(df, table, label)
     commit(table, Seq(f), append, props)
   }
 
@@ -125,12 +162,11 @@ final class IceLite(rootDir: String) {
     val m = snapshotId.map(manifest(table, _)).orElse(currentManifest(table))
     // mergeSchema reads EVERY file's footer (schema evolution across
     // appended deltas — e.g. an upgraded build appending wider rows to
-    // a pre-upgrade table); the default single-footer inference stays
-    // the hot path
+    // a pre-upgrade table); the default read takes the recorded schema
     m.filter(_.files.nonEmpty).map(mm =>
       if (mergeSchema)
         spark.read.option("mergeSchema", "true").parquet(mm.files: _*)
-      else spark.read.parquet(mm.files: _*))
+      else readFiles(spark, mm.files: _*))
   }
 
   def props(table: String): Map[String, String] =

@@ -482,6 +482,27 @@ class EngineGoldenSpec extends AnyFunSuite {
     }
   }
 
+  test("frontier data dirs hold at most one part file per core after init " +
+    "and every round; golden across numBuckets 4/8/32") {
+    val web = SyntheticWeb(nHosts = 6, pagesPerHost = 8, megaFactor = 3)
+    val cores = spark.sparkContext.defaultParallelism
+    Seq(4, 8, 32).foreach { buckets =>
+      val cfg = CrawlConfig(numBuckets = buckets, roundMs = 500, maxRounds = 6)
+      val (sim, eng, stats) = runBoth(web, 12, cfg)
+      assertGolden(sim, eng)
+      // snapshot 0 is init's seed write, snapshot n round n-1's rewrite
+      val snaps = 0L to eng.ice.currentSnapshotId("frontier").get
+      assert(snaps.size === stats.size + 1)
+      snaps.foreach { id =>
+        eng.ice.manifest("frontier", id).files.foreach { f =>
+          val parts = new java.io.File(f).list().count(_.startsWith("part-"))
+          assert(parts <= cores,
+            s"numBuckets=$buckets snapshot $id: $parts part files in $f")
+        }
+      }
+    }
+  }
+
   test("resume from snapshot reproduces the uninterrupted run") {
     val web = SyntheticWeb(nHosts = 5, pagesPerHost = 6, megaFactor = 2)
     val cfg = CrawlConfig(numBuckets = 8, roundMs = 500, maxRounds = 6)
